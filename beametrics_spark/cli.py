@@ -101,16 +101,7 @@ def build_parser() -> argparse.ArgumentParser:
 
 def validate_args(args: argparse.Namespace) -> None:
     """Reference validation rules (main.py:104-139, metrics.py:24-32)."""
-    if args.export_type not in VALID_EXPORT_TYPES + (
-        "console",
-        "memory",
-        "parquet",
-        "json",
-        "csv",
-        "orc",
-        "idempotent-parquet",
-        "google-cloud-monitoring-executor",
-    ):
+    if args.export_type not in VALID_EXPORT_TYPES:
         raise ValueError(f"Unsupported export type: {args.export_type}")
     if args.metric_type not in ("count", "sum"):
         raise ValueError(f"Unsupported metric type: {args.metric_type}")

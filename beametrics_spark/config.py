@@ -30,8 +30,20 @@ except ImportError:  # pragma: no cover
 DEFAULT_WINDOW_SIZE = 60  # seconds; reference pipeline.py:29
 DEFAULT_CLI_WINDOW_SIZE = 120  # reference main.py:77-79
 
-VALID_OPERATORS = ("equals", "contains", "greater_than", "less_than")
-VALID_EXPORT_TYPES = ("google-cloud-monitoring", "local")
+# Keys of sinks.SINK_REGISTRY (a test keeps the two equal); the first two
+# are the reference's own exporters (metrics_exporter.py:149-156).
+VALID_EXPORT_TYPES = (
+    "google-cloud-monitoring",
+    "local",
+    "console",
+    "memory",
+    "parquet",
+    "json",
+    "csv",
+    "orc",
+    "idempotent-parquet",
+    "google-cloud-monitoring-executor",
+)
 MONITORING_METRIC_PREFIX = "custom.googleapis.com/"  # reference main.py:228-232
 
 
@@ -49,13 +61,6 @@ class FilterCondition:
     field: str
     value: Any
     operator: str
-
-    def __post_init__(self) -> None:
-        if self.operator not in VALID_OPERATORS:
-            # The reference defers this to match-time (unknown op ⇒ no match,
-            # filter.py:42). We keep that runtime behavior in filters.py but
-            # also surface an early warning-free construction path.
-            pass
 
     @classmethod
     def from_dict(cls, d: dict[str, Any]) -> "FilterCondition":
@@ -105,16 +110,7 @@ class ExporterConfig:
     options: dict[str, Any] = field(default_factory=dict)
 
     def __post_init__(self) -> None:
-        if self.export_type not in VALID_EXPORT_TYPES and self.export_type not in (
-            "console",
-            "memory",
-            "parquet",
-            "json",
-            "csv",
-            "orc",
-            "idempotent-parquet",
-            "google-cloud-monitoring-executor",
-        ):
+        if self.export_type not in VALID_EXPORT_TYPES:
             raise ValueError(f"Unsupported export type: {self.export_type}")
 
 
@@ -159,10 +155,6 @@ def normalize_window_size(value: Any, default: int = DEFAULT_WINDOW_SIZE) -> int
         return default
     if isinstance(value, float) and not float(value).is_integer():
         return default
-    if isinstance(value, str):
-        # int("60") works but the reference only accepts integral providers;
-        # strings like "abc" already raised above. Accept numeric strings.
-        pass
     return size if size > 0 else default
 
 

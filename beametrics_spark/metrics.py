@@ -9,6 +9,9 @@ Reference semantics (SURVEY.md §2.1 rows 4-5):
            str(msg.get(field_name, "")) — missing field ⇒ "" and the
            dynamic value WINS on key collision (pipeline.py:188-198,
            metrics.py:40-48).
+  - label set: carried through the aggregate as ONE ARRAY<STRING> of
+           values in sorted-label-name order (labels_key_expr); the
+           plan builder rebuilds the MAP<STRING,STRING> after it.
 
 Where the reference's ``float(...)`` would raise on a non-numeric field
 (crashing the Beam bundle), we use try_cast → 0.0: a distributed engine
@@ -39,21 +42,37 @@ def _label_value(rf: ResolvedField) -> Column:
     return F.coalesce(rf.col.cast("string"), F.lit(""))
 
 
-def label_entries(
-    definition: MetricDefinition, resolve: FieldResolver
-) -> list[tuple[str, Column]]:
-    """Merged static+dynamic labels as (key, value-expr) pairs, sorted by key.
+def label_names(definition: MetricDefinition) -> list[str]:
+    """Static ∪ dynamic label names, sorted — the element order of
+    ``labels_key_expr`` and of the output map's keys.
 
-    Sorted order makes the concatenated values a canonical grouping key —
-    the analog of the reference's tuple(sorted(labels.items())) at
-    pipeline.py:172. Dynamic labels win on key collision (pipeline.py:198).
+    Sorted order makes the value array a canonical grouping key, the
+    analog of the reference's tuple(sorted(labels.items())) at
+    pipeline.py:172.
     """
-    merged: dict[str, Column] = {
-        k: F.lit(str(v)) for k, v in definition.metric_labels.items()
-    }
+    return sorted({**definition.metric_labels, **definition.dynamic_labels})
+
+
+def labels_key_expr(definition: MetricDefinition, resolve: FieldResolver) -> Column:
+    """ARRAY<STRING> of label values in ``label_names`` order.
+
+    Spark cannot group by MapType, and carrying a map through the
+    aggregation (first(labels)) forces sort-based aggregation — so the
+    pre-aggregation path carries ONLY this array; the map is rebuilt
+    after the aggregate. An array needs no separator, so any label value
+    (control bytes included) round-trips. Within one metric_id the label
+    names are fixed by config, and the grouping key always includes
+    metric_id, so different name sets never collide. Dynamic labels win
+    on key collision (pipeline.py:198).
+    """
     cap = definition.label_cardinality_cap
-    for label_name, field_name in definition.dynamic_labels.items():
-        value = _label_value(resolve(field_name))  # dynamic wins
+    values: list[Column] = []
+    for name in label_names(definition):
+        field_name = definition.dynamic_labels.get(name)
+        if field_name is None:
+            values.append(F.lit(str(definition.metric_labels[name])))
+            continue
+        value = _label_value(resolve(field_name))
         if cap is not None:
             # cardinality guard: bounded label domain via deterministic
             # hash bucketing (state/backend protection, SURVEY.md §4.3)
@@ -61,56 +80,5 @@ def label_entries(
                 F.lit("b"),
                 F.pmod(F.xxhash64(value), F.lit(int(cap))).cast("string"),
             )
-        merged[label_name] = value
-    return [(k, merged[k]) for k in sorted(merged)]
-
-
-def labels_expr(definition: MetricDefinition, resolve: FieldResolver) -> Column:
-    """MAP<STRING,STRING> of merged static+dynamic labels."""
-    entries = label_entries(definition, resolve)
-    if not entries:
-        return F.create_map().cast("map<string,string>")
-    pairs: list[Column] = []
-    for k, v in entries:
-        pairs.extend([F.lit(k), v])
-    return F.create_map(*pairs)
-
-
-LABEL_KEY_SEP = "\x01"
-
-
-def labels_key_expr(definition: MetricDefinition, resolve: FieldResolver) -> Column:
-    """Canonical STRING grouping key for the label set.
-
-    Spark cannot group by MapType, and carrying a map through the
-    aggregation (first(labels)) forces sort-based aggregation — so the
-    pre-aggregation path carries ONLY this string. Within one metric_id
-    the label key set is fixed by config and emitted in sorted order, so
-    concatenating the values with an unprintable separator is canonical;
-    the grouping key always includes metric_id, so different key sets
-    never collide. (A label VALUE containing \\x01 would collide keys —
-    accepted and documented, control chars don't appear in label fields.)
-    """
-    entries = label_entries(definition, resolve)
-    if not entries:
-        return F.lit("")
-    return F.concat_ws(LABEL_KEY_SEP, *[v for _k, v in entries])
-
-
-def labels_from_key_expr(
-    definition: MetricDefinition, labels_key: Column
-) -> Column:
-    """Rebuild the MAP<STRING,STRING> from the canonical key, POST-agg.
-
-    Runs on aggregated rows (bounded cardinality), keeping the hot
-    pre-shuffle path map-free so Catalyst uses hash aggregation.
-    """
-    keys = sorted(
-        set(definition.metric_labels) | set(definition.dynamic_labels)
-    )
-    if not keys:
-        return F.create_map().cast("map<string,string>")
-    return F.map_from_arrays(
-        F.array(*[F.lit(k) for k in keys]),
-        F.split(labels_key, LABEL_KEY_SEP, -1),
-    )
+        values.append(value)
+    return F.array(*values).cast("array<string>")

@@ -14,12 +14,13 @@ Design choices for 100-TB scale (SURVEY.md §4.3):
   - Catalyst supplies filter pushdown, partial (map-side) aggregation and
     whole-stage codegen for free — the reference hand-rolls filter-before-
     shuffle and relies on Beam combiner lifting (pipeline.py:168-180).
-  - Labels travel pre-shuffle as ONE canonical string key (sorted-key
-    value concatenation — the analog of the reference's
-    tuple(sorted(labels.items())) normalization, pipeline.py:172); the
-    MAP<STRING,STRING> is rebuilt post-aggregation. Spark cannot group by
-    MapType, and a map in any aggregate buffer forces SortAggregate —
-    keeping the hot path map-free keeps it HashAggregate + codegen.
+  - Labels travel pre-shuffle as ONE ARRAY<STRING> key: the label
+    values in sorted-name order, the analog of the reference's
+    tuple(sorted(labels.items())) normalization (pipeline.py:172). The
+    MAP<STRING,STRING> is rebuilt post-aggregation with map_from_arrays.
+    Spark cannot group by MapType, and a map in any aggregate buffer
+    forces SortAggregate — keeping the hot path map-free keeps it
+    HashAggregate + codegen.
   - An OR-of-all-configs prefilter runs before the explode so simple
     predicates reach the parquet scan as PushedFilters.
   - Aggregation is always sum-of-contributions; COUNT rows contribute 1.0
@@ -36,11 +37,7 @@ from functools import reduce
 
 from beametrics_spark.config import MetricConfig, normalize_window_size
 from beametrics_spark.filters import FieldResolver, compile_filter, schema_resolver
-from beametrics_spark.metrics import (
-    labels_from_key_expr,
-    labels_key_expr,
-    value_expr,
-)
+from beametrics_spark.metrics import label_names, labels_key_expr, value_expr
 
 
 def prefilter_expr(
@@ -122,11 +119,6 @@ def fan_out(
     src = df if pre is None else df.filter(pre)
     if len(configs) == 1:
         cfg = configs[0]
-        if pre is None and cfg.filter_conditions:
-            # single config below the match-all prefilter bar (unreachable
-            # today — one config with conditions makes pre non-None — but
-            # kept equivalent if prefilter policy ever loosens)
-            src = src.filter(compile_filter(cfg.filter_conditions, resolve))
         return src.select(
             F.col(ts_col).alias("ts"),
             F.lit(0).cast("int").alias("metric_id"),
@@ -181,7 +173,7 @@ def aggregate_windows(
     invalid sizes fall back to 60 s (pipeline.py:50-65). Sliding and
     session windows via ``window_spec`` (see MetricConfig).
 
-    The labels MAP is reconstructed from the canonical key AFTER the
+    The labels MAP is rebuilt from the label-value array AFTER the
     aggregation (bounded-cardinality rows), so the pre-shuffle path is
     map-free and Catalyst plans HashAggregate partial→final.
 
@@ -273,21 +265,24 @@ def aggregate_windows(
             "metric_id",
             "labels_key",
         ).agg(F.sum("value").alias("value"))
-    # config-side projections on aggregated rows: metric name + labels map
-    # (tiny when-chains — the reference keeps configs in a Python list the
-    # same way, pipeline.py:225-231)
-    name_expr = F.lit(None).cast("string")
-    labels_expr_out = F.lit(None).cast("map<string,string>")
-    for i, cfg in enumerate(configs):
-        is_i = F.col("metric_id") == i
-        name_expr = F.when(is_i, F.lit(cfg.export_metric_name)).otherwise(name_expr)
-        labels_expr_out = F.when(
-            is_i, labels_from_key_expr(cfg.metric_definition, F.col("labels_key"))
-        ).otherwise(labels_expr_out)
+    # config-side projections on aggregated rows: metric name + labels map,
+    # each one lookup by metric_id into a literal per-config array (the
+    # reference keeps configs in a Python list the same way,
+    # pipeline.py:225-231)
+    metric_id = F.col("metric_id")
+    names = F.array(*[F.lit(cfg.export_metric_name) for cfg in configs])
+    label_keys = F.array(
+        *[
+            F.array(*map(F.lit, label_names(cfg.metric_definition))).cast(
+                "array<string>"
+            )
+            for cfg in configs
+        ]
+    )
     return agg.select(
         "metric_id",
-        name_expr.alias("metric_name"),
-        labels_expr_out.alias("labels"),
+        names[metric_id].alias("metric_name"),
+        F.map_from_arrays(label_keys[metric_id], F.col("labels_key")).alias("labels"),
         F.col("value").cast("double").alias("value"),
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
@@ -341,12 +336,8 @@ def build_metrics_pipeline(
         subset = [configs[i] for i in idxs]
         fanned = fan_out(events, subset, ts_col=ts_col, resolve=resolve)
         # re-tag metric_id back to global config index
-        mapping = F.lit(None).cast("int")
-        for local, global_i in enumerate(idxs):
-            mapping = F.when(F.col("metric_id") == local, F.lit(global_i)).otherwise(
-                mapping
-            )
-        fanned = fanned.withColumn("metric_id", mapping)
+        global_ids = F.array(*map(F.lit, idxs))
+        fanned = fanned.withColumn("metric_id", global_ids[F.col("metric_id")])
         branch = aggregate_windows(
             fanned,
             configs,

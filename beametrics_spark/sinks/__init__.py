@@ -26,7 +26,7 @@ from __future__ import annotations
 import json
 import sys
 import time
-from typing import Any, Callable, Iterator, Protocol
+from typing import Any, Callable, Iterable, Iterator, Protocol
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -162,6 +162,35 @@ def build_time_series_request(
     }
 
 
+def _push_time_series(
+    project_id: str,
+    client_factory: Callable[[], Any],
+    recs: Iterable[dict[str, Any]],
+) -> None:
+    """One create_time_series call per aggregate row.
+
+    The client is created on the first row, so an empty batch or
+    partition builds none (DoFn.setup, pipeline.py:218-223).
+    InvalidArgument-shaped errors are swallowed like the reference
+    (metrics_exporter.py:116-119); everything else propagates.
+    """
+    client = None
+    for rec in recs:
+        if client is None:
+            client = client_factory()
+        req = build_time_series_request(
+            project_id=project_id,
+            metric_name=rec.get("metric_name", ""),
+            value=float(rec.get("value", 0.0)),
+            static_labels=rec.get("labels") or {},
+        )
+        try:
+            client.create_time_series(req)
+        except Exception as exc:  # noqa: BLE001
+            if "InvalidArgument" not in type(exc).__name__:
+                raise
+
+
 class GoogleCloudMonitoringSink:
     """At-least-once push to Cloud Monitoring.
 
@@ -179,29 +208,19 @@ class GoogleCloudMonitoringSink:
         self.project_id = project_id
         self.client_factory = client_factory
 
-    def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+    def _factory(self) -> Callable[[], Any]:
         if self.client_factory is None:
             raise NotImplementedError(
                 "google-cloud-monitoring client not available in this "
                 "environment; inject client_factory"
             )
-        client = self.client_factory()  # once per batch, like DoFn.setup
-        for rec in _rows_iter(batch_df):
-            req = build_time_series_request(
-                project_id=self.project_id,
-                metric_name=rec.get("metric_name", ""),
-                value=float(rec.get("value", 0.0)),
-                static_labels=rec.get("labels") or {},
-            )
-            try:
-                client.create_time_series(req)
-            except Exception as exc:  # noqa: BLE001
-                if "InvalidArgument" in type(exc).__name__:
-                    continue  # swallowed, reference metrics_exporter.py:116-119
-                raise
+        return self.client_factory
+
+    def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
+        _push_time_series(self.project_id, self._factory(), _rows_iter(batch_df))
 
 
-class GoogleCloudMonitoringPartitionedSink:
+class GoogleCloudMonitoringPartitionedSink(GoogleCloudMonitoringSink):
     """Executor-side variant of GoogleCloudMonitoringSink: writes via
     ``batch_df.foreachPartition`` with ONE client per non-empty
     partition — the exact analog of the reference's per-bundle client
@@ -216,47 +235,17 @@ class GoogleCloudMonitoringPartitionedSink:
     swallow-InvalidArgument semantics as the reference
     (metrics_exporter.py:116-121).
 
-    ``client_factory`` must be picklable (it ships to executors); it is
-    called lazily so empty partitions construct no client.
+    ``client_factory`` must be picklable (it ships to executors).
     """
 
-    def __init__(
-        self,
-        project_id: str,
-        client_factory: Callable[[], Any] | None = None,
-    ) -> None:
-        self.project_id = project_id
-        self.client_factory = client_factory
-
     def write(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
-        if self.client_factory is None:
-            raise NotImplementedError(
-                "google-cloud-monitoring client not available in this "
-                "environment; inject client_factory"
-            )
         project_id = self.project_id
-        factory = self.client_factory
-
-        def _write_partition(rows: Iterator[Any]) -> None:
-            client = None
-            for row in rows:
-                if client is None:  # once per non-empty partition (DoFn.setup)
-                    client = factory()
-                rec = row.asDict(recursive=True)
-                req = build_time_series_request(
-                    project_id=project_id,
-                    metric_name=rec.get("metric_name", ""),
-                    value=float(rec.get("value", 0.0)),
-                    static_labels=rec.get("labels") or {},
-                )
-                try:
-                    client.create_time_series(req)
-                except Exception as exc:  # noqa: BLE001
-                    if "InvalidArgument" in type(exc).__name__:
-                        continue  # swallowed, reference metrics_exporter.py:116-119
-                    raise
-
-        batch_df.foreachPartition(_write_partition)
+        factory = self._factory()
+        batch_df.foreachPartition(
+            lambda rows: _push_time_series(
+                project_id, factory, (row.asDict(recursive=True) for row in rows)
+            )
+        )
 
 
 class IdempotentParquetSink:

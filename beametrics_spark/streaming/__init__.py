@@ -10,8 +10,7 @@ Decode semantics (reference pipeline.py:82-108): try utf-8, shift-jis,
 euc-jp, iso-2022-jp in that order; a JSON parse error after a successful
 decode, or total decode failure, DROPS the message (returns []). The
 multi-encoding fallback needs Python — implemented as an Arrow-batched
-Pandas UDF, NOT a per-row UDF. When payloads are known UTF-8 (the
-idiomatic default), `decode_utf8_json` keeps everything JVM-side.
+Pandas UDF, NOT a per-row UDF.
 """
 
 from __future__ import annotations
@@ -92,15 +91,6 @@ def decode_multi_encoding(payload: pd.Series) -> pd.Series:
         return None
 
     return payload.map(_decode)
-
-
-def decode_utf8_json(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """JVM-side fast path: strict-UTF-8 decode; malformed ⇒ null ⇒ dropped."""
-    text = F.col(value_col).cast("string")
-    valid = F.get_json_object(text, "$") .isNotNull()
-    return df.withColumn("_json", F.when(valid, text)).filter(
-        F.col("_json").isNotNull()
-    )
 
 
 def parse_events(

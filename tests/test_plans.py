@@ -77,12 +77,30 @@ def test_fanout_single_scan(spark, sf_dir):
 def test_partial_aggregation_before_shuffle(spark, sf_dir):
     """HashAggregate(partial) → Exchange → HashAggregate(final) — Catalyst's
     combiner lifting (the reference relies on Beam's CombinePerKey for the
-    same property, pipeline.py:180)."""
+    same property, pipeline.py:180). With dynamic labels the array<string>
+    label key must keep both shapes (flat and exploded fan-out) on hash
+    aggregation: no SortAggregate, no ObjectHashAggregate."""
     events = load_table(spark, sf_dir, "events")
     out = build_metrics_pipeline(events, configs(1), window_size=60)
     plan = plan_of(out)
     assert re.search(r"partial_(sum|first)", plan), plan
     assert "Exchange hashpartitioning" in plan
+    labeled = MetricConfig(
+        metric_definition=MetricDefinition(
+            name="by_user",
+            type="count",
+            metric_labels={"svc": "api"},
+            dynamic_labels={"user": "user_id", "et": "event_type"},
+        ),
+        filter_conditions=[FilterCondition("event_type", "error", "equals")],
+    )
+    for cfgs in ([labeled], configs(1) + [labeled]):
+        out = build_metrics_pipeline(events, cfgs, window_size=60)
+        out.collect()
+        plan = plan_of(out)
+        assert "HashAggregate" in plan, plan
+        assert "SortAggregate" not in plan, plan
+        assert "ObjectHashAggregate" not in plan, plan
 
 
 def test_broadcast_dimension_join(spark, sf_dir):

@@ -41,6 +41,16 @@ def test_factory_dispatch_and_invalid():
         create_sink("bogus")
 
 
+def test_export_types_match_sink_registry():
+    """config validates export types against one tuple; it must name
+    exactly the sinks the registry can build."""
+    from beametrics_spark.config import VALID_EXPORT_TYPES
+    from beametrics_spark.sinks import SINK_REGISTRY
+
+    assert len(set(VALID_EXPORT_TYPES)) == len(VALID_EXPORT_TYPES)
+    assert set(SINK_REGISTRY) == set(VALID_EXPORT_TYPES)
+
+
 def test_local_sink_golden_output(spark):
     # golden format: {"timestamp", "metric_name", "value", "labels"}
     # (reference metrics_exporter.py:213-220, test:161-178)

@@ -94,6 +94,50 @@ def test_batch_stream_parity(spark, tmp_path):
     }
 
 
+def test_stream_label_value_with_separator_byte(spark, tmp_path):
+    """A label value containing \\x01 (or NUL) commits its micro-batch and
+    comes out as the exact map — the state key is an array of label
+    values, with no separator to collide with."""
+    src = tmp_path / "in"
+    src.mkdir()
+    with open(src / "a.json", "w") as f:
+        for ts, sev, b in [
+            ("2024-01-01T00:00:05", "ERR\x01A", 10),
+            ("2024-01-01T00:00:25", "ERR\x01A", 15),
+            ("2024-01-01T00:00:35", "x\x00y", 7),
+        ]:
+            f.write(json.dumps({"ts": ts, "severity": sev, "bytes": b}) + "\n")
+
+    cfg = MetricConfig(
+        metric_definition=MetricDefinition(
+            name="bytes_by_sev",
+            type="sum",
+            field="bytes",
+            metric_labels={"svc": "api"},
+            dynamic_labels={"sev": "severity"},
+        ),
+    )
+    sink = MemorySink()
+    q = run_metrics_stream(
+        spark.readStream.schema(EVENT_SCHEMA).json(str(src)),
+        [cfg],
+        {0: sink},
+        window_size=60,
+        watermark="10 seconds",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        output_mode="update",
+    )
+    q.processAllAvailable()
+    assert q.exception() is None
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 3
+    q.stop()
+    got = {(tuple(sorted(r["labels"].items())), r["value"]) for r in sink.rows}
+    assert got == {
+        ((("sev", "ERR\x01A"), ("svc", "api")), 25.0),
+        ((("sev", "x\x00y"), ("svc", "api")), 7.0),
+    }
+
+
 def test_monitoring_sink_contract_through_foreachbatch(spark, tmp_path):
     """End-to-end adapter contract: a streaming query pushing to the
     Cloud Monitoring sink with an injected fake client keeps running
