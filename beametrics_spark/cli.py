@@ -59,13 +59,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--watermark", default="30 seconds")
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--output-mode", default="update")
-    p.add_argument(
-        "--salt-buckets",
-        default=None,
-        type=int,
-        help="batch only: two-phase salted aggregation for hot label sets "
-        "(N reducers per hot (window, metric, labels) key — SURVEY §4.3)",
-    )
 
     p.add_argument(
         "--sql",
@@ -229,12 +222,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.batch:
         events = read_parquet(spark, args.source_path)
-        out = build_metrics_pipeline(
-            events,
-            configs,
-            ts_col=args.ts_field,
-            salt_buckets=args.salt_buckets,
-        )
+        out = build_metrics_pipeline(events, configs, ts_col=args.ts_field)
         from beametrics_spark.sinks import route_by_metric
 
         route_by_metric(sinks)(out, 0)

@@ -131,6 +131,21 @@ class MetricConfig:
     window_slide: int | None = None
     session_gap: int | None = None
 
+    def __post_init__(self) -> None:
+        # reject here what would fail at plan time (slide > size) or
+        # silently emit nothing (a non-positive session gap)
+        name = self.metric_definition.name
+        size = normalize_window_size(self.window_size)
+        if self.window_slide is not None and not 0 < self.window_slide <= size:
+            raise ValueError(
+                f"metric {name!r}: window_slide must be in (0, {size}], "
+                f"got {self.window_slide}"
+            )
+        if self.session_gap is not None and self.session_gap <= 0:
+            raise ValueError(
+                f"metric {name!r}: session_gap must be > 0, got {self.session_gap}"
+            )
+
     @property
     def export_metric_name(self) -> str:
         """Cloud sink gets a prefix, local keeps the raw name.
@@ -203,8 +218,8 @@ def _config_from_mapping(entry: dict[str, Any], *, default_export: str = "local"
         filter_conditions=conditions,
         exporter=exporter,
         window_size=normalize_window_size(entry.get("window_size", window_size)),
-        window_slide=int(slide) if slide else None,
-        session_gap=int(gap) if gap else None,
+        window_slide=None if slide is None else int(slide),
+        session_gap=None if gap is None else int(gap),
     )
 
 

@@ -70,7 +70,7 @@ def e4_dollars(amount_e4: Column, ndigits: int = 2) -> Column:
 
 
 def _check_no_salt_column(*frames: DataFrame) -> None:
-    """The salting helpers inject an internal '_salt' column; silently
+    """salted_join injects an internal '_salt' column; silently
     overwriting (left side) or duplicating (right side) a caller's
     existing '_salt' would corrupt the join keys, so fail loudly."""
     for frame in frames:
@@ -79,58 +79,6 @@ def _check_no_salt_column(*frames: DataFrame) -> None:
                 "input already has a '_salt' column; rename it before "
                 "using the salting helpers (reserved internal name)"
             )
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: dict[str, Column],
-    *,
-    salt_buckets: int = 16,
-    salt_on: str | None = None,
-) -> DataFrame:
-    """Two-phase aggregation for skewed keys.
-
-    Phase 1 groups by (keys ∪ salt) — the hot key's rows spread over
-    ``salt_buckets`` reducers; phase 2 merges the partials per key. Only
-    ALGEBRAIC aggregates compose this way; supported: sum/count (re-sum),
-    min, max. The ``aggs`` dict maps output column name → phase-1
-    aggregate expression built from F.sum/F.count/F.min/F.max.
-
-    The salt is a deterministic hash of ``salt_on`` (default: a stable
-    per-row expression over all columns) — no rand(), so results are
-    reproducible and restart-safe in streaming.
-
-    AQE's skew handling covers JOINS; aggregation skew still needs this
-    classic rewrite at 100 TB (one ultra-hot label-set would otherwise
-    pin a single reducer).
-    """
-    _check_no_salt_column(df)
-    salt_src = (
-        F.col(salt_on)
-        if salt_on
-        else F.concat_ws("\x02", *[F.col(c).cast("string") for c in df.columns])
-    )
-    salt = F.pmod(F.xxhash64(salt_src), F.lit(salt_buckets)).alias("_salt")
-
-    phase1_aggs = []
-    merge_aggs = []
-    for name, expr in aggs.items():
-        phase1_aggs.append(expr.alias(f"_p_{name}"))
-        # merge rule by aggregate kind (sum/count re-sum; min/max re-apply)
-        kind = expr._jc.toString().split("(")[0].lower()
-        if kind.startswith(("sum", "count")):
-            merge_aggs.append(F.sum(f"_p_{name}").alias(name))
-        elif kind.startswith("min"):
-            merge_aggs.append(F.min(f"_p_{name}").alias(name))
-        elif kind.startswith("max"):
-            merge_aggs.append(F.max(f"_p_{name}").alias(name))
-        else:
-            raise ValueError(
-                f"non-algebraic aggregate for salting: {kind} ({name})"
-            )
-    partial = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(*phase1_aggs)
-    return partial.groupBy(*keys).agg(*merge_aggs)
 
 
 # Documented-baseline paths (all-pairs cosine, brute-force ANN) are

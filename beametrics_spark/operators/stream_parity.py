@@ -702,18 +702,17 @@ def stream_funnel_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_salted_fanout_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multi-metric fan-out executed through the SALTED two-phase
-    streaming path (chained stateful time-window aggregations,
-    salt_buckets=8) — the hot-label-set deployment shape — checked
-    against the plain batch SQL oracle: salting is an execution detail,
-    sum is algebraic, so the values must be IDENTICAL to the unsalted
-    batch aggregate.
+    """The multi-metric fan-out executed as a stream in APPEND mode,
+    checked against the plain batch SQL oracle: the values must be
+    IDENTICAL to the batch aggregate. The name is historical: the engine
+    no longer salts, since partial aggregation already sends a hot key
+    through the shuffle as at most one row per map partition.
 
-    Chained stateful aggregation forces APPEND output, which emits only
-    watermark-finalized windows; both sides therefore cut to windows
-    whose start precedes the fanned stream's max event time by >= 180 s — every
-    such window's end provably precedes the final watermark
-    (max_ts - 60 s), independent of any emit-boundary tie semantics."""
+    APPEND output emits only watermark-finalized windows; both sides
+    therefore cut to windows whose start precedes the fanned stream's max
+    event time by >= 180 s — every such window's end provably precedes
+    the final watermark (max_ts - 60 s), independent of any emit-boundary
+    tie semantics."""
     path = os.path.join(sf_dir, "events.parquet")
     with _scoped_conf(spark):
         stream, stream_dir = _file_stream(
@@ -732,7 +731,7 @@ def stream_salted_fanout_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
         plan = build_metrics_pipeline(
-            stream, cfgs, window_size=60, watermark="60 seconds", salt_buckets=8
+            stream, cfgs, window_size=60, watermark="60 seconds"
         )
         out = _drain_to_table(spark, plan, "salted_parity", "append", stream_dir)
         batch = spark.read.parquet(path)

@@ -1,4 +1,4 @@
-"""Plan builder: parsed events → fan-out → tumbling window → count/sum.
+"""Plan builder: parsed events → fan-out → window → count/sum.
 
 This is the Spark-first re-expression of the reference's 6-stage Beam chain
 (beametrics/pipeline.py:164-186):
@@ -14,6 +14,10 @@ Design choices for 100-TB scale (SURVEY.md §4.3):
   - Catalyst supplies filter pushdown, partial (map-side) aggregation and
     whole-stage codegen for free — the reference hand-rolls filter-before-
     shuffle and relies on Beam combiner lifting (pipeline.py:168-180).
+    Partial aggregation sends a hot (window, metric, labels) key through
+    the shuffle as at most one row per map partition, so there is no
+    salting: one groupBy + sum per window spec is the only shape, built
+    by one loop over the specs, in batch and in streaming alike.
   - Labels travel pre-shuffle as ONE ARRAY<STRING> key: the label
     values in sorted-name order, the analog of the reference's
     tuple(sorted(labels.items())) normalization (pipeline.py:172). The
@@ -161,110 +165,34 @@ def aggregate_windows(
     fanned: DataFrame,
     configs: list[MetricConfig],
     *,
-    window_size: int | None = None,
-    window_spec: tuple[int, int | None, int | None] | None = None,
+    window_spec: tuple[int, int | None, int | None],
     watermark: str | None = None,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
-    """Windowed sum per (metric_id, labels_key).
+    """Windowed sum per (window, metric_id, labels_key) for one window spec.
 
-    Tumbling default: window start = ts - ts % size, identical bucketing
-    math to the reference's DynamicFixedWindows.assign (pipeline.py:67-70);
-    invalid sizes fall back to 60 s (pipeline.py:50-65). Sliding and
-    session windows via ``window_spec`` (see MetricConfig).
+    One groupBy + sum: Catalyst plans it as HashAggregate partial → final,
+    so a hot key reaches the shuffle as at most one row per map partition
+    — the reference's combiner lifting (CombinePerKey(sum),
+    pipeline.py:180). Tumbling buckets are ts - ts % size, the reference's
+    DynamicFixedWindows.assign (pipeline.py:67-70); sliding and session
+    windows come from the spec (see MetricConfig).
 
     The labels MAP is rebuilt from the label-value array AFTER the
     aggregation (bounded-cardinality rows), so the pre-shuffle path is
-    map-free and Catalyst plans HashAggregate partial→final.
+    map-free and stays hash-based.
 
     ``watermark`` (e.g. "30 seconds") is only applied to streaming frames —
     the reference has NO watermark (SURVEY.md §2.2); bounded state at scale
     requires one, so streaming callers must pass it.
-
-    ``salt_buckets`` opts into two-phase SALTED aggregation for hot label
-    sets — the reference's documented OOM scenario (SURVEY.md §4.3: one
-    ultra-hot (metric, labels) key pins a single reducer; Beam's combiner
-    lifting bounds memory but not the straggler). Phase 1 spreads each
-    (window, metric_id, labels_key) over salt_buckets reducers keyed by a
-    deterministic ts-hash; phase 2 merges partials per key — sum is
-    algebraic, so results are bit-identical to the unsalted path (pinned
-    by test_pipeline). Tumbling windows only (sliding/session windows
-    exist only as groupBy generators — one row → many windows). On a
-    STREAMING frame the two phases run as chained stateful time-window
-    aggregations (Spark's multiple-stateful-operator support: phase 2
-    re-windows on window_time(window), so the engine can track both
-    operators' watermarks); a watermark is mandatory there, and state
-    doubles — (key × salt) rows in phase 1 plus key rows in phase 2 —
-    the price of bounding the per-reducer hot-key row count. Exercised
-    end-to-end by tests/test_streaming.py::test_streaming_salted_fanout
-    against the batch unsalted truth.
     """
-    if window_spec is None:
-        size = normalize_window_size(
-            window_size if window_size is not None else configs[0].window_size
-        )
-        window_spec = (size, None, None)
     src = fanned
     if watermark is not None and fanned.isStreaming:
         src = fanned.withWatermark("ts", watermark)
-    if salt_buckets:
-        size, slide, gap = window_spec
-        if (slide not in (None, size)) or gap is not None:
-            raise ValueError(
-                "salt_buckets supports tumbling windows only"
-            )
-        if src.isStreaming:
-            if watermark is None:
-                raise ValueError(
-                    "streaming salted aggregation requires a watermark "
-                    "(chained stateful aggregation state must be bounded)"
-                )
-            from beametrics_spark.functions import _check_no_salt_column
-
-            _check_no_salt_column(src)
-            phase1 = (
-                src.withColumn(
-                    "_salt",
-                    F.pmod(F.xxhash64("ts"), F.lit(salt_buckets)),
-                )
-                .groupBy(
-                    _window_expr(window_spec).alias("window"),
-                    "metric_id",
-                    "labels_key",
-                    "_salt",
-                )
-                .agg(F.sum("value").alias("_pv"))
-            )
-            agg = phase1.groupBy(
-                F.window(
-                    F.window_time("window"), f"{size} seconds"
-                ).alias("window"),
-                "metric_id",
-                "labels_key",
-            ).agg(F.sum("_pv").alias("value"))
-        else:
-            from beametrics_spark.functions import salted_aggregate
-
-            pre = src.select(
-                _window_expr(window_spec).alias("window"),
-                "metric_id",
-                "labels_key",
-                "value",
-                "ts",
-            )
-            agg = salted_aggregate(
-                pre,
-                ["window", "metric_id", "labels_key"],
-                {"value": F.sum("value")},
-                salt_buckets=salt_buckets,
-                salt_on="ts",
-            )
-    else:
-        agg = src.groupBy(
-            _window_expr(window_spec).alias("window"),
-            "metric_id",
-            "labels_key",
-        ).agg(F.sum("value").alias("value"))
+    agg = src.groupBy(
+        _window_expr(window_spec).alias("window"),
+        "metric_id",
+        "labels_key",
+    ).agg(F.sum("value").alias("value"))
     # config-side projections on aggregated rows: metric name + labels map,
     # each one lookup by metric_id into a literal per-config array (the
     # reference keeps configs in a Python list the same way,
@@ -297,53 +225,39 @@ def build_metrics_pipeline(
     window_size: int | None = None,
     watermark: str | None = None,
     resolve: FieldResolver | None = None,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Full plan: fan-out → window aggregate → formatted metric points.
 
     Works identically on batch and streaming DataFrames; the DuckDB oracle
     checks the batch plan, streaming deployment adds watermark + sink.
-    Configs with distinct window sizes are grouped so each size gets one
-    aggregation (the reference supports only a single pipeline-wide window).
+    Configs are grouped by window spec (``window_size`` forces one tumbling
+    spec for all); each spec is one branch that fans out its configs in
+    one scan and aggregates once, and the branches are unioned (the
+    reference supports only a single pipeline-wide window).
+
+    Each branch re-tags its local metric_id to the global config index
+    BEFORE the aggregate, so the streaming state key (window, metric_id,
+    labels_key) holds global ids whatever the spec grouping.
     """
     if not configs:
         raise ValueError("at least one MetricConfig required")
     resolve = resolve or schema_resolver(events)
     specs: dict[tuple[int, int | None, int | None], list[int]] = {}
-    if window_size is not None:
-        specs = {
-            (normalize_window_size(window_size), None, None): list(
-                range(len(configs))
-            )
-        }
-    else:
-        for i, cfg in enumerate(configs):
-            specs.setdefault(window_spec_of(cfg), []).append(i)
-    if len(specs) == 1:
-        fanned = fan_out(events, configs, ts_col=ts_col, resolve=resolve)
-        (spec,) = specs
-        return aggregate_windows(
-            fanned,
-            configs,
-            window_spec=spec,
-            watermark=watermark,
-            salt_buckets=salt_buckets,
+    for i, cfg in enumerate(configs):
+        spec = (
+            window_spec_of(cfg)
+            if window_size is None
+            else (normalize_window_size(window_size), None, None)
         )
-    # Rare: heterogenous window specs → one branch per spec (each branch
-    # still fans out all its configs in one scan).
-    out: DataFrame | None = None
+        specs.setdefault(spec, []).append(i)
+    branches = []
     for spec, idxs in specs.items():
-        subset = [configs[i] for i in idxs]
-        fanned = fan_out(events, subset, ts_col=ts_col, resolve=resolve)
-        # re-tag metric_id back to global config index
+        fanned = fan_out(
+            events, [configs[i] for i in idxs], ts_col=ts_col, resolve=resolve
+        )
         global_ids = F.array(*map(F.lit, idxs))
         fanned = fanned.withColumn("metric_id", global_ids[F.col("metric_id")])
-        branch = aggregate_windows(
-            fanned,
-            configs,
-            window_spec=spec,
-            watermark=watermark,
-            salt_buckets=salt_buckets,
+        branches.append(
+            aggregate_windows(fanned, configs, window_spec=spec, watermark=watermark)
         )
-        out = branch if out is None else out.unionByName(branch)
-    return out
+    return reduce(DataFrame.unionByName, branches)

@@ -135,18 +135,13 @@ def run_metrics_stream(
     trigger: dict | None = None,
     query_name: str = "beametrics",
     state_partitions: int | None = STREAM_STATE_PARTITIONS,
-    salt_buckets: int | None = None,
 ):
     """Start the streaming query; returns the StreamingQuery handle.
 
     update-mode + watermark is the documented default (SURVEY.md §7.3):
     each trigger emits refreshed aggregates for windows touched in that
     batch, like the reference's per-firing Cloud Monitoring writes.
-
-    ``salt_buckets`` opts into the chained two-phase salted aggregation
-    for hot label sets (see aggregate_windows); Spark restricts multiple
-    stateful operators to APPEND output, so pass output_mode="append"
-    with it (finalized windows emit once the watermark passes).
+    "append" emits each window once, after the watermark passes its end.
     """
     plan = build_metrics_pipeline(
         events,
@@ -154,7 +149,6 @@ def run_metrics_stream(
         ts_col=ts_col,
         window_size=window_size,
         watermark=watermark,
-        salt_buckets=salt_buckets,
     )
     writer = (
         plan.writeStream.outputMode(output_mode)

@@ -254,8 +254,9 @@ ITERATIVE_QUERIES = [
 # 90-query run they evict and silently recompute inside the timer, so
 # the number flaps between ~0.1s and the full cost run to run).
 # Rebuilding per trial is the honest, stable protocol for them.
-# Module-level so scripts/scale_probe.py times the SAME set the same
-# way (scaling_check.py already imports ITERATIVE_QUERIES from here).
+# Module-level so scaling measurements time the SAME set the same way
+# (scaling_check.py already imports ITERATIVE_QUERIES from here; the sf1
+# probe results are recorded in SCALING.md).
 CONSTRUCTION_TIMED = {
     "supplier_cotrade_triangles",   # backbone edge checkpoint
     "dedup_minhash_lsh",            # candidate-set checkpoint
@@ -455,7 +456,7 @@ def main() -> int:
     # full_count=0 — no exhaustion on this box).
     #
     # Why every query and not every 25 (the first r13 cadence): measured
-    # with scripts/ab_interleave_probe.py (sf1 replica, the SAME plan
+    # by an interleaved A/B (OPTIMIZATION_r13.md; sf1 replica, the SAME plan
     # re-executed round over round in one session), a no-GC session
     # degraded MONOTONICALLY — ~12 s -> 29 s -> 76 s by round 5 on a
     # ~6 s query — while the per-round-gc session held 5.7-7.4 s flat

@@ -164,3 +164,28 @@ metrics:
     assert configs[0].window_size == 120 and configs[0].window_slide == 60
     assert configs[0].session_gap is None
     assert configs[1].session_gap == 1800 and configs[1].window_slide is None
+
+
+@pytest.mark.parametrize(
+    "extension, match",
+    [
+        ({"window_size": 60, "window_slide": 120}, "window_slide"),
+        ({"window_size": 60, "window_slide": -30}, "window_slide"),
+        ({"session_gap": -5}, "session_gap"),
+        ({"session_gap": 0}, "session_gap"),
+    ],
+)
+def test_invalid_window_extension_rejected_at_load(extension, match):
+    # a slide longer than the window (or negative) used to load and then
+    # fail at plan time; a negative session gap loaded and the pipeline
+    # emitted zero points; a zero gap silently became a tumbling window
+    metrics = json.dumps([{"name": "bad_window", "type": "count", **extension}])
+    with pytest.raises(ValueError, match=f"'bad_window'.*{match}"):
+        load_metric_configs(metrics_json=metrics)
+
+
+def test_window_slide_equal_to_size_is_accepted():
+    cfg = MetricConfig(
+        metric_definition=MetricDefinition(name="m"), window_size=60, window_slide=60
+    )
+    assert cfg.window_slide == 60

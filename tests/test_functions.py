@@ -1,65 +1,16 @@
-"""functions/ helpers: salted aggregation correctness + time_bucket,
+"""functions/ helpers: salted join correctness + time_bucket,
 plans/ helpers sanity."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from beametrics_spark.functions import salted_aggregate, time_bucket
+from beametrics_spark.functions import time_bucket
 from beametrics_spark.plans import (
-    exchanges,
     pushed_filters,
     scan_count,
     uses_hash_aggregate,
 )
 from beametrics_spark.sources import load_table
-
-
-def test_salted_aggregate_matches_plain(spark, sf_dir):
-    events = load_table(spark, sf_dir, "events")
-    plain = {
-        (r["event_type"], r["n"], round(r["total"], 6), r["mx"])
-        for r in events.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("total"),
-            F.max("value").alias("mx"),
-        )
-        .collect()
-    }
-    salted = {
-        (r["event_type"], r["n"], round(r["total"], 6), r["mx"])
-        for r in salted_aggregate(
-            events,
-            ["event_type"],
-            {
-                "n": F.count(F.lit(1)),
-                "total": F.sum("value"),
-                "mx": F.max("value"),
-            },
-            salt_buckets=8,
-        ).collect()
-    }
-    assert plain == salted
-
-
-def test_salted_aggregate_spreads_hot_key(spark):
-    df = spark.createDataFrame(
-        [("hot", float(i)) for i in range(1000)], "k string, v double"
-    )
-    out = salted_aggregate(
-        df, ["k"], {"total": F.sum("v"), "n": F.count(F.lit(1))}, salt_buckets=4
-    )
-    rows = out.collect()
-    assert len(rows) == 1
-    assert rows[0]["n"] == 1000 and rows[0]["total"] == sum(range(1000))
-    # two-phase plan: at least two aggregation exchanges
-    assert len(exchanges(out)) >= 2
-
-
-def test_salted_aggregate_rejects_non_algebraic(spark):
-    df = spark.createDataFrame([("a", 1.0)], "k string, v double")
-    with pytest.raises(ValueError, match="non-algebraic"):
-        salted_aggregate(df, ["k"], {"a": F.avg("v")})
 
 
 def test_time_bucket_matches_window(spark, sf_dir):
@@ -165,13 +116,10 @@ def test_salted_join_rejects_unsupported_how(spark):
 def test_salting_rejects_existing_salt_column(spark):
     import pytest
 
-    from beametrics_spark.functions import salted_aggregate, salted_join
-    from pyspark.sql import functions as F
+    from beametrics_spark.functions import salted_join
 
     df = spark.createDataFrame([(1, 2)], "k long, _salt long")
     clean = spark.createDataFrame([(1, 2)], "k long, v long")
-    with pytest.raises(ValueError, match="_salt"):
-        salted_aggregate(df, ["k"], {"n": F.count(F.lit(1))})
     with pytest.raises(ValueError, match="_salt"):
         salted_join(df, clean, "k")
     with pytest.raises(ValueError, match="_salt"):

@@ -119,6 +119,8 @@ def test_monitoring_prefix_in_output(logs):
 
 
 def test_heterogeneous_window_sizes(logs):
+    # specs group configs [0, 2] and [1]: the 60 s branch's local ids 0, 1
+    # must come back as global ids 0, 2, with that config's name and labels
     cfgs = [
         MetricConfig(
             metric_definition=MetricDefinition(name="m60", type="count"),
@@ -128,12 +130,26 @@ def test_heterogeneous_window_sizes(logs):
             metric_definition=MetricDefinition(name="m120", type="count"),
             window_size=120,
         ),
+        MetricConfig(
+            metric_definition=MetricDefinition(
+                name="m60_region", type="count", dynamic_labels={"region": "region"}
+            ),
+            window_size=60,
+        ),
     ]
     out = run(logs, cfgs)
-    by_id = {o["metric_id"]: o for o in out}
-    assert by_id[0]["window_end"] == datetime(2024, 1, 1, 0, 1, 0)
-    assert by_id[1]["window_end"] == datetime(2024, 1, 1, 0, 2, 0)
-    assert by_id[0]["value"] == 3.0 and by_id[1]["value"] == 3.0
+    end60, end120 = datetime(2024, 1, 1, 0, 1, 0), datetime(2024, 1, 1, 0, 2, 0)
+    assert sorted(
+        (o["metric_id"], o["metric_name"], sorted(o["labels"].items()),
+         o["window_end"], o["value"])
+        for o in out
+    ) == [
+        (0, "m60", [], end60, 3.0),
+        (1, "m120", [], end120, 3.0),
+        (2, "m60_region", [("region", "")], end60, 1.0),
+        (2, "m60_region", [("region", "eu")], end60, 1.0),
+        (2, "m60_region", [("region", "us")], end60, 1.0),
+    ]
 
 
 LABEL_SCHEMA = T.StructType(
@@ -260,77 +276,3 @@ def test_label_cardinality_guard(spark, sf_dir):
     assert len(labels[1]) <= 5  # guard bounds the domain
     assert all(v.startswith("b") for v in labels[1])
     assert total[0] == total[1]  # no events lost, only re-bucketed
-
-
-def test_salted_aggregate_windows_matches_plain(spark, sf_dir):
-    """Opt-in salted two-phase windowed aggregation (the SURVEY §4.3
-    hot-label-set scenario): identical output to the plain path, with the
-    salted plan pinned (two aggregation exchanges, _salt in the keys)."""
-    from beametrics_spark.config import (
-        FilterCondition,
-        MetricConfig,
-        MetricDefinition,
-    )
-    from beametrics_spark.pipeline import build_metrics_pipeline
-    from beametrics_spark.plans import exchanges
-    from beametrics_spark.sources import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    cfgs = [
-        MetricConfig(
-            metric_definition=MetricDefinition(
-                name="v_sum",
-                type="sum",
-                field="value",
-                metric_labels={"t": "static"},
-                dynamic_labels={"et": "event_type"},
-            ),
-            filter_conditions=[FilterCondition("value", 10, "greater_than")],
-        ),
-        MetricConfig(
-            metric_definition=MetricDefinition(name="n_err", type="count"),
-            filter_conditions=[
-                FilterCondition("event_type", "error", "equals")
-            ],
-        ),
-    ]
-
-    def canon(df):
-        return sorted(
-            (
-                r.metric_id,
-                r.metric_name,
-                tuple(sorted((r.labels or {}).items())),
-                round(r.value, 6),
-                r.window_start,
-            )
-            for r in df.collect()
-        )
-
-    plain = build_metrics_pipeline(events, cfgs, window_size=300)
-    salted = build_metrics_pipeline(
-        events, cfgs, window_size=300, salt_buckets=8
-    )
-    assert canon(salted) == canon(plain)
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "_salt" in plan  # phase-1 grouping carries the salt
-    assert len(exchanges(salted)) >= 2  # two-phase: partial + merge
-
-
-def test_salted_aggregate_windows_rejects_non_tumbling(spark, sf_dir):
-    import pytest
-
-    from beametrics_spark.config import MetricConfig, MetricDefinition
-    from beametrics_spark.pipeline import aggregate_windows, fan_out
-    from beametrics_spark.sources import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    cfg = MetricConfig(
-        metric_definition=MetricDefinition(name="n", type="count"),
-        filter_conditions=[],
-    )
-    fanned = fan_out(events, [cfg])
-    with pytest.raises(ValueError, match="tumbling"):
-        aggregate_windows(
-            fanned, [cfg], window_spec=(300, 60, None), salt_buckets=8
-        )

@@ -102,6 +102,51 @@ def test_partial_aggregation_before_shuffle(spark, sf_dir):
         assert "SortAggregate" not in plan, plan
         assert "ObjectHashAggregate" not in plan, plan
 
+    # hot key: 90 % of the rows share one (window, metric, labels) key; the
+    # partial aggregate must ship at most one row per key per map
+    # partition, which is why the engine needs no salting
+    map_partitions = 4
+    hot = spark.range(0, 20_000, 1, map_partitions).select(
+        F.timestamp_seconds(F.lit(1_704_067_230)).alias("ts"),
+        F.when(F.col("id") % 10 < 9, F.lit("hot"))
+        .otherwise(F.concat(F.lit("cold"), (F.col("id") % 7).cast("string")))
+        .alias("user_id"),
+    )
+    by_user = MetricConfig(
+        metric_definition=MetricDefinition(
+            name="by_user", type="count", dynamic_labels={"user": "user_id"}
+        ),
+    )
+    out = build_metrics_pipeline(hot, [by_user], window_size=60)
+    rows = out.collect()
+    assert {r["labels"]["user"]: r["value"] for r in rows}["hot"] == 18_000
+    partial_rows = partial_aggregate_output_rows(out)
+    assert 0 < partial_rows <= len(rows) * map_partitions, partial_rows
+
+
+def partial_aggregate_output_rows(df) -> int:
+    """numOutputRows of the HashAggregates below the first Exchange of the
+    executed (adaptive, final) plan; read after an action on ``df``."""
+    total = 0
+
+    def walk(node, below_exchange):
+        nonlocal total
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan(), below_exchange)
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan(), below_exchange)
+        name = node.nodeName()
+        below_exchange = below_exchange or "Exchange" in name
+        if name == "HashAggregate" and below_exchange:
+            total += node.metrics().apply("numOutputRows").value()
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), below_exchange)
+
+    walk(df._jdf.queryExecution().executedPlan(), False)
+    return total
+
 
 def test_broadcast_dimension_join(spark, sf_dir):
     from beametrics_spark.operators.relational import revenue_by_nation

@@ -507,18 +507,14 @@ def test_append_mode_watermark_drops_late_events(spark, tmp_path):
     assert (w1, 1.0) in emitted
 
 
-def test_streaming_salted_fanout(spark, tmp_path):
-    """Chained two-phase SALTED aggregation under the streaming harness
-    (VERDICT r5 #9): a planted ultra-hot label set (one severity owns
-    ~97% of the rows) streams through phase-1 (window × key × salt
-    partial sums) chained into phase-2 (window × key merge) — Spark's
-    multiple-stateful-operator support — and the finalized windows must
-    be value-identical to the BATCH UNSALTED truth. Append mode: Spark
-    restricts chained stateful aggregations to append output, so only
-    watermark-finalized windows emit; a far-future flush row closes
-    every data window."""
-    import datetime
-
+def test_streaming_hot_key_matches_batch(spark, tmp_path):
+    """A planted ultra-hot label set (one severity owns ~97% of the rows)
+    streams through the one stateful window aggregate, and the finalized
+    windows must be value-identical to the batch truth. Partial
+    aggregation combines the hot key per map partition before the state
+    shuffle, so no salting is needed. Append mode: only
+    watermark-finalized windows emit; a far-future flush row closes every
+    data window."""
     rows = []
     # hot key: 970 rows of severity=HOT across 3 windows; cold tail
     for i in range(970):
@@ -563,7 +559,6 @@ def test_streaming_salted_fanout(spark, tmp_path):
         watermark="10 seconds",
         checkpoint_dir=str(tmp_path / "ckpt"),
         output_mode="append",
-        salt_buckets=8,
     )
     q.processAllAvailable()
     q.stop()
@@ -576,19 +571,3 @@ def test_streaming_salted_fanout(spark, tmp_path):
     # the hot key really was hot: one (window, label) row sums 300+ rows
     hot = [v for _, labels, v in batch if ("sev", "HOT") in labels]
     assert hot and max(hot) >= 3000
-
-
-def test_streaming_salted_requires_watermark_and_append(spark, tmp_path):
-    """Guard rails: no watermark → loud error (unbounded chained state);
-    update mode → Spark itself rejects chained stateful aggregation."""
-    from beametrics_spark.pipeline import aggregate_windows, fan_out
-    from beametrics_spark.pipeline import schema_resolver
-
-    cfg = MetricConfig(
-        metric_definition=MetricDefinition(name="m", type="count"),
-        filter_conditions=[],
-    )
-    stream_df = spark.readStream.schema(EVENT_SCHEMA).json(str(tmp_path))
-    fanned = fan_out(stream_df, [cfg], resolve=schema_resolver(stream_df))
-    with pytest.raises(ValueError, match="watermark"):
-        aggregate_windows(fanned, [cfg], window_size=60, salt_buckets=8)
