@@ -9,6 +9,7 @@ from beametrics_spark.operators.graph import (
     N_ITER,
     pagerank_customer_supplier,
 )
+from beametrics_spark.sources import load_table
 
 
 def test_pagerank_top_rows_and_mass(spark, sf_dir):
@@ -44,10 +45,15 @@ def test_pagerank_mass_conserved(spark, sf_dir):
     import beametrics_spark.operators.graph as g
 
     # recompute full rank table (not just top-25) via the module body
-    # with TOP_N temporarily widened
+    # with TOP_N temporarily widened to the node count: every node is a
+    # customer or a supplier. The limit sizes the top-k buffer, so a
+    # 10**9 limit asked the JVM for gigabytes
+    n_nodes = sum(
+        load_table(spark, sf_dir, t).count() for t in ("customer", "supplier")
+    )
     old = g.TOP_N
     try:
-        g.TOP_N = 10**9
+        g.TOP_N = n_nodes
         rows = pagerank_customer_supplier(spark, sf_dir).collect()
     finally:
         g.TOP_N = old

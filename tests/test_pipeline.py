@@ -6,7 +6,7 @@ from collections import Counter
 from datetime import datetime
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
@@ -178,6 +178,14 @@ LABEL_CONFIGS = [
 ]
 
 
+def utf8_text(s: str) -> str:
+    """``s`` as it reaches a Spark string column: text crosses to the JVM
+    as UTF-8, which cannot encode a surrogate code point (Python strings
+    may hold one, even two that would pair in UTF-16), so each becomes
+    U+FFFD."""
+    return "".join("\ufffd" if "\ud800" <= c <= "\udfff" else c for c in s)
+
+
 def model_label_counts(rows, configs):
     """Pure-Python group-by: (metric, label set) -> count, with the
     reference's label merge (pipeline.py:188-198, missing field => "")."""
@@ -189,7 +197,7 @@ def model_label_counts(rows, configs):
             labels = dict(d.metric_labels)
             for name, field_name in d.dynamic_labels.items():
                 v = msg.get(field_name)
-                labels[name] = "" if v is None else str(v)
+                labels[name] = "" if v is None else utf8_text(str(v))
             out[(d.name, frozenset(labels.items()))] += 1.0
     return out
 
@@ -237,6 +245,8 @@ label_text = st.text(
     ),
     n_configs=st.sampled_from([1, 2]),
 )
+@example(values=[(None, "\ud800")], n_configs=1)
+@example(values=[("\ud800", "\udc00"), ("\udfff", "\ud83d\ude00")], n_configs=2)
 @settings(
     max_examples=25,
     deadline=None,

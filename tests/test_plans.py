@@ -10,6 +10,7 @@ engine promises (SURVEY.md §4.3, build-plan north star):
 """
 
 import re
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -102,9 +103,12 @@ def test_partial_aggregation_before_shuffle(spark, sf_dir):
         assert "SortAggregate" not in plan, plan
         assert "ObjectHashAggregate" not in plan, plan
 
-    # hot key: 90 % of the rows share one (window, metric, labels) key; the
-    # partial aggregate must ship at most one row per key per map
-    # partition, which is why the engine needs no salting
+
+def test_hot_key_partial_aggregate_bounded(spark):
+    """Hot key: 90 % of the rows share one (window, metric, labels) key.
+    The windowed counts match a direct count of the input, and the partial
+    aggregate ships at most one row per key per map partition, which is
+    why the engine needs no salting."""
     map_partitions = 4
     hot = spark.range(0, 20_000, 1, map_partitions).select(
         F.timestamp_seconds(F.lit(1_704_067_230)).alias("ts"),
@@ -119,7 +123,15 @@ def test_partial_aggregation_before_shuffle(spark, sf_dir):
     )
     out = build_metrics_pipeline(hot, [by_user], window_size=60)
     rows = out.collect()
-    assert {r["labels"]["user"]: r["value"] for r in rows}["hot"] == 18_000
+    want: dict = {}
+    for i in range(20_000):
+        user = "hot" if i % 10 < 9 else f"cold{i % 7}"
+        want[user] = want.get(user, 0) + 1
+    assert want["hot"] == 18_000
+    assert {r["labels"]["user"]: r["value"] for r in rows} == want
+    assert {(r["metric_name"], r["window_start"]) for r in rows} == {
+        ("by_user", datetime(2024, 1, 1, 0, 0, 0))
+    }
     partial_rows = partial_aggregate_output_rows(out)
     assert 0 < partial_rows <= len(rows) * map_partitions, partial_rows
 
