@@ -45,7 +45,10 @@ from beametrics_spark.metrics import label_names, labels_key_expr, value_expr
 
 
 def prefilter_expr(
-    configs: list[MetricConfig], resolve: FieldResolver
+    configs: list[MetricConfig],
+    resolve: FieldResolver,
+    *,
+    preds: list[Column] | None = None,
 ) -> Column | None:
     """OR of all config predicates, applied BEFORE the fan-out explode.
 
@@ -53,41 +56,25 @@ def prefilter_expr(
     anyway — but expressed as a plain Filter, Catalyst pushes the
     disjunction into the parquet scan (PushedFilters), which the
     generator-embedded predicates alone cannot achieve. None ⇒ some
-    config is match-all, skip the filter.
+    config is match-all, skip the filter. ``preds`` are the configs'
+    compiled predicates, when the caller already has them.
     """
-    preds = []
-    for cfg in configs:
-        if not cfg.filter_conditions:
-            return None  # match-all config: every row survives anyway
-        preds.append(compile_filter(cfg.filter_conditions, resolve))
+    if any(not cfg.filter_conditions for cfg in configs):
+        return None  # match-all config: every row survives anyway
+    if preds is None:
+        preds = [compile_filter(cfg.filter_conditions, resolve) for cfg in configs]
     return reduce(lambda a, b: a | b, preds)
 
 
-def fanout_entries(
-    configs: list[MetricConfig], resolve: FieldResolver
-) -> Column:
-    """Array of per-config contribution structs; non-matching ⇒ NULL entry.
-
-    One message → 0..N keyed records (reference FlatMap, pipeline.py:168-178),
-    built as a single expression tree evaluated in one scan. Pre-shuffle
-    rows carry (metric_id, value, labels_key) — no map types, so the
-    windowed aggregation stays hash-based (maps force SortAggregate).
-    NULL entries are dropped AFTER the explode by a plain codegen Filter
-    (fan_out) — not here with an ArrayFilter lambda, which would run
-    interpreted per row (HOFs are CodegenFallback).
-    """
-    entries = [
-        F.when(
-            compile_filter(cfg.filter_conditions, resolve),
-            F.struct(
-                F.lit(i).cast("int").alias("metric_id"),
-                value_expr(cfg.metric_definition, resolve).alias("value"),
-                labels_key_expr(cfg.metric_definition, resolve).alias("labels_key"),
-            ),
-        )
-        for i, cfg in enumerate(configs)
+def _contribution(
+    cfg: MetricConfig, metric_id: int, resolve: FieldResolver
+) -> list[Column]:
+    """(metric_id, value, labels_key) of one config's record."""
+    return [
+        F.lit(metric_id).cast("int").alias("metric_id"),
+        value_expr(cfg.metric_definition, resolve).alias("value"),
+        labels_key_expr(cfg.metric_definition, resolve).alias("labels_key"),
     ]
-    return F.array(*entries)
 
 
 def fan_out(
@@ -96,8 +83,14 @@ def fan_out(
     *,
     ts_col: str = "ts",
     resolve: FieldResolver | None = None,
+    ids: list[int] | None = None,
 ) -> DataFrame:
     """events → (ts, metric_id, value, labels_key), single scan.
+
+    ``ids`` are the metric_ids written for ``configs`` (default
+    0..n-1): the caller's global config indices, so no later projection
+    re-tags them. Each config's predicate is compiled once and serves
+    both the prefilter and its fan-out entry.
 
     Single-config fast path (the reference's own deployment shape — one
     MetricConfig per pipeline is its documented common case): no array,
@@ -112,32 +105,40 @@ def fan_out(
     semantics require, not the pipeline around it (from_json and
     Spark-4 variant_get were A/B'd at 2.17 s / 2.07 s — no faster).
 
-    Multi-config: one explode over the per-config struct array. The
-    non-matching entries explode as NULL structs and are dropped by a
-    plain post-Generate Filter — NOT by an ArrayFilter lambda on the
-    array (higher-order functions are CodegenFallback in Spark: the r9
-    shape evaluated an interpreted filter per row on the hot path).
+    Multi-config: one explode over an array of per-config structs, one
+    message → 0..N keyed records (reference FlatMap, pipeline.py:168-178),
+    built as a single expression tree evaluated in one scan. A
+    non-matching config's entry is a NULL struct, dropped by a plain
+    post-Generate Filter — NOT by an ArrayFilter lambda on the array
+    (higher-order functions are CodegenFallback in Spark: the r9 shape
+    evaluated an interpreted filter per row on the hot path). Pre-shuffle
+    rows carry no map types, so the windowed aggregation stays
+    hash-based (maps force SortAggregate).
     """
     resolve = resolve or schema_resolver(df)
-    pre = prefilter_expr(configs, resolve)
+    ids = list(range(len(configs))) if ids is None else ids
+    preds = [compile_filter(cfg.filter_conditions, resolve) for cfg in configs]
+    pre = prefilter_expr(configs, resolve, preds=preds)
     src = df if pre is None else df.filter(pre)
+    ts = F.col(ts_col).alias("ts")
     if len(configs) == 1:
-        cfg = configs[0]
-        return src.select(
-            F.col(ts_col).alias("ts"),
-            F.lit(0).cast("int").alias("metric_id"),
-            value_expr(cfg.metric_definition, resolve).alias("value"),
-            labels_key_expr(cfg.metric_definition, resolve).alias("labels_key"),
-        )
-    exploded = src.select(
-        F.col(ts_col).alias("ts"),
-        F.explode(fanout_entries(configs, resolve)).alias("m"),
-    ).filter(F.col("m").isNotNull())
+        return src.select(ts, *_contribution(configs[0], ids[0], resolve))
+    entries = [
+        F.when(pred, F.struct(*_contribution(cfg, i, resolve)))
+        for i, (cfg, pred) in enumerate(zip(configs, preds))
+    ]
+    exploded = src.select(ts, F.explode(F.array(*entries)).alias("m")).filter(
+        F.col("m").isNotNull()
+    )
+    # entry position -> id by indexing a literal array: unlike the
+    # nullable struct field, the result is non-nullable, and the
+    # streaming state key's schema (nullability included) must match the
+    # checkpoint's for a query to resume
     return exploded.select(
         "ts",
-        F.col("m.metric_id").alias("metric_id"),
-        F.col("m.value").alias("value"),
-        F.col("m.labels_key").alias("labels_key"),
+        F.array(*map(F.lit, ids))[F.col("m.metric_id")].alias("metric_id"),
+        "m.value",
+        "m.labels_key",
     )
 
 
@@ -235,9 +236,9 @@ def build_metrics_pipeline(
     one scan and aggregates once, and the branches are unioned (the
     reference supports only a single pipeline-wide window).
 
-    Each branch re-tags its local metric_id to the global config index
-    BEFORE the aggregate, so the streaming state key (window, metric_id,
-    labels_key) holds global ids whatever the spec grouping.
+    Each branch's fan-out writes the global config index as metric_id,
+    so the streaming state key (window, metric_id, labels_key) holds
+    global ids whatever the spec grouping.
     """
     if not configs:
         raise ValueError("at least one MetricConfig required")
@@ -253,10 +254,12 @@ def build_metrics_pipeline(
     branches = []
     for spec, idxs in specs.items():
         fanned = fan_out(
-            events, [configs[i] for i in idxs], ts_col=ts_col, resolve=resolve
+            events,
+            [configs[i] for i in idxs],
+            ts_col=ts_col,
+            resolve=resolve,
+            ids=idxs,
         )
-        global_ids = F.array(*map(F.lit, idxs))
-        fanned = fanned.withColumn("metric_id", global_ids[F.col("metric_id")])
         branches.append(
             aggregate_windows(fanned, configs, window_spec=spec, watermark=watermark)
         )

@@ -1,4 +1,8 @@
-"""SparkSession factory tuned for the driver's local[32] environment.
+"""SparkSession factory for a local-mode driver sized to its host.
+
+With ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` unset, the session
+takes as many cores as this process may run on and a driver heap of half
+the host's physical memory (at most 20g); the variables, when set, win.
 
 At real cluster scale the same settings matter for different reasons:
 AQE re-plans shuffle partition counts and skew joins at runtime, UTC
@@ -14,10 +18,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Driver heap ceiling: the operator bench session runs 60+ query plans
+# back to back, and at 8g old-gen pressure from accumulated codegen
+# classes + broadcast cleanup showed up as multi-second timing outliers
+# on otherwise sub-2s queries.
+MAX_DRIVER_MEM_MB = 20 * 1024
+
+
+def session_resources(environ=os.environ) -> tuple[str, str]:
+    """(local-mode cores, driver memory) for ``get_spark``.
+
+    The environment wins; otherwise the cores this process may run on,
+    and half of physical memory capped at 20g — the JVM's RSS runs past
+    its heap, and a 20g heap on a 15 GiB host was OOM-killed mid-suite.
+    """
+    cpus = environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    mem = environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+        mem = f"{min(phys_mb // 2, MAX_DRIVER_MEM_MB)}m"
+    return cpus, mem
+
+
 def get_spark(app_name: str = "beametrics_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = session_resources()
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -56,11 +82,12 @@ def get_spark(app_name: str = "beametrics_spark", *, shuffle_partitions: int | N
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.ui.enabled", "false")
-        # 20g: the bench session runs 60+ query plans back to back; at 8g
-        # old-gen pressure from accumulated codegen classes + broadcast
-        # cleanup showed up as multi-second timing outliers on otherwise
-        # sub-2s queries. The machine has 128 GiB; a production driver
-        # sizes this to its own plan/broadcast volume.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
+        # Static conf: with debugging on, PySpark sends the Python call
+        # site to the JVM around every DataFrame/Column call — about 3/4
+        # of the py4j round trips of a metrics-plan build (3,939 -> 898
+        # calls for the json_replay plan). Off, analysis errors only lose
+        # the Python call site from their context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.driver.memory", driver_mem)
     )
     return builder.getOrCreate()

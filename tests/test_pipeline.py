@@ -150,6 +150,12 @@ def test_heterogeneous_window_sizes(logs):
         (2, "m60_region", [("region", "eu")], end60, 1.0),
         (2, "m60_region", [("region", "us")], end60, 1.0),
     ]
+    # metric_id is part of the streaming state key, whose schema a
+    # checkpoint stores with its nullability: it must stay non-nullable
+    # in single- and multi-config branches alike
+    for configs in (cfgs, cfgs[:1]):
+        plan = build_metrics_pipeline(logs, configs)
+        assert plan.schema["metric_id"].nullable is False
 
 
 LABEL_SCHEMA = T.StructType(

@@ -4,6 +4,7 @@ failure swallowing — SURVEY.md §5)."""
 
 import io
 import json
+import uuid
 
 import pytest
 
@@ -142,6 +143,85 @@ def test_route_by_metric_dispatch(spark):
     route_by_metric({0: s0, 1: s1})(_points_df(spark), 0)
     assert [r["metric_name"] for r in s0.rows] == ["error_count"]
     assert [r["metric_name"] for r in s1.rows] == ["bytes_sum"]
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` starts."""
+    sc = spark.sparkContext
+    gid = "test-" + uuid.uuid4().hex[:12]
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _three_metric_points(spark):
+    """30 points over 6 partitions; point ``id`` belongs to metric id % 3."""
+    return spark.range(0, 30, numPartitions=6).selectExpr(
+        "CAST(id % 3 AS INT) AS metric_id",
+        "concat('m', CAST(id % 3 AS STRING)) AS metric_name",
+        "map('id', CAST(id AS STRING)) AS labels",
+        "CAST(id AS DOUBLE) AS value",
+    )
+
+
+def test_route_by_metric_runs_one_job(spark):
+    """Row sinks share one collect() of the batch: one Spark job however
+    many metrics and partitions, and each sink gets exactly its points."""
+    df = _three_metric_points(spark)
+    assert df.rdd.getNumPartitions() >= 4
+    sinks = {m: MemorySink() for m in range(3)}
+    assert _jobs_run_by(spark, lambda: route_by_metric(sinks)(df, 0)) == 1
+    for m, sink in sinks.items():
+        assert sorted(r["value"] for r in sink.rows) == [
+            float(i) for i in range(m, 30, 3)
+        ]
+        assert {r["metric_name"] for r in sink.rows} == {f"m{m}"}
+        assert all(r["labels"] == {"id": str(int(r["value"]))} for r in sink.rows)
+
+
+def test_route_by_metric_dataframe_sink_beside_row_sinks(spark, tmp_path):
+    """A DataFrame sink gets only its metric's frame; the row sinks beside
+    it get only theirs."""
+    path = str(tmp_path / "out")
+    s0, s2 = MemorySink(), MemorySink()
+    route_by_metric({0: s0, 1: ParquetSink(path), 2: s2})(
+        _three_metric_points(spark), 0
+    )
+    back = spark.read.parquet(path)
+    assert sorted(r["value"] for r in back.collect()) == [
+        float(i) for i in range(1, 30, 3)
+    ]
+    assert {r["metric_id"] for r in back.collect()} == {1}
+    assert sorted(r["value"] for r in s0.rows) == [float(i) for i in range(0, 30, 3)]
+    assert sorted(r["value"] for r in s2.rows) == [float(i) for i in range(2, 30, 3)]
+
+
+def test_route_by_metric_drops_metric_without_sink(spark):
+    s1 = MemorySink()
+    route_by_metric({1: s1})(_three_metric_points(spark), 0)
+    assert sorted(r["value"] for r in s1.rows) == [float(i) for i in range(1, 30, 3)]
+
+
+def test_route_by_metric_empty_batch_builds_no_client(spark):
+    built = []
+
+    class Client:
+        def __init__(self):
+            built.append(self)
+
+        def create_time_series(self, req):
+            pass
+
+    sink = GoogleCloudMonitoringSink("proj", client_factory=Client)
+    empty = _three_metric_points(spark).limit(0)
+    route_by_metric({0: sink, 1: sink})(empty, 0)
+    assert built == []
+    route_by_metric({0: sink, 1: sink})(_three_metric_points(spark), 1)
+    assert len(built) == 2  # one per metric's points of a non-empty batch
 
 
 def test_monitoring_adapter_fake_records_and_swallows(spark):

@@ -94,6 +94,53 @@ def test_batch_stream_parity(spark, tmp_path):
     }
 
 
+def test_stream_routes_each_batch_in_few_jobs(spark, tmp_path):
+    """foreachBatch routing collects a micro-batch once for both metrics:
+    at most 2 Spark jobs per batch in the query's job group (the state
+    aggregation and the collect), not one per metric and state partition."""
+    src = tmp_path / "in"
+    src.mkdir()
+    for i in range(2):
+        with open(src / f"{i}.json", "w") as f:
+            for s in range(0, 60, 5):
+                ts = f"2024-01-01T00:0{i}:{s:02d}"
+                sev = "ERROR" if s % 10 == 0 else "INFO"
+                f.write(json.dumps({"ts": ts, "severity": sev, "bytes": s}) + "\n")
+    cfgs = [
+        MetricConfig(
+            metric_definition=MetricDefinition(name="err_bytes", type="sum", field="bytes"),
+            filter_conditions=[FilterCondition("severity", "ERROR", "equals")],
+        ),
+        MetricConfig(metric_definition=MetricDefinition(name="all_count", type="count")),
+    ]
+    sinks = {0: MemorySink(), 1: MemorySink()}
+    ckpt = tmp_path / "ckpt"
+    q = run_metrics_stream(
+        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).json(str(src)),
+        cfgs,
+        sinks,
+        window_size=60,
+        watermark="10 seconds",
+        checkpoint_dir=str(ckpt),
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert q.exception() is None
+    batches = [p for p in (ckpt / "commits").iterdir() if p.name.isdigit()]
+    assert len(batches) >= 2
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 2 * len(batches)
+
+    def points(sink):
+        return sorted((r["window_start"].minute, r["value"]) for r in sink.rows)
+
+    # each file holds one window, so each window is emitted once
+    assert points(sinks[0]) == [(0, 150.0), (1, 150.0)]
+    assert points(sinks[1]) == [(0, 12.0), (1, 12.0)]
+    assert {r["metric_name"] for r in sinks[0].rows} == {"err_bytes"}
+    assert {r["metric_name"] for r in sinks[1].rows} == {"all_count"}
+
+
 def test_stream_label_value_with_separator_byte(spark, tmp_path):
     """A label value containing \\x01 (or NUL) commits its micro-batch and
     comes out as the exact map — the state key is an array of label
